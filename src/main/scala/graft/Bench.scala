@@ -1,29 +1,27 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Min-of-passes with failure sentinel: a pass that threw reads +Inf;
-    * both passes failed → -1 (excluded from the total). Factored out so
-    * BenchSentinelSpec can pin the masquerading-speedup fix without a
-    * full bench run. */
-  private[graft] def combinePasses(a: Double, b: Double): Double = {
-    val m = math.min(a, b)
-    if (m.isInfinity) -1.0 else m
+  private[graft] final case class Summary(
+      timed: Seq[(String, Double)], failed: Seq[String]) {
+    def total: Double = timed.map(_._2).sum
   }
-  private[graft] def totalOf(rs: Iterable[Double]): Double =
-    rs.filter(_ >= 0).sum
+
+  /** Min-of-passes per key: a pass that threw reads +Inf, so one
+    * successful pass still wins the min. A key whose passes all threw
+    * goes to the failed list and never reaches the timing map or the
+    * total — timed at its time-to-throw it would read as a speedup.
+    * Factored out so BenchSentinelSpec can pin the rule without a full
+    * bench run. */
+  private[graft] def combinePasses(passes: Seq[(String, Double, Double)]): Summary = {
+    val (timed, failed) = passes
+      .map { case (k, a, b) => k -> math.min(a, b) }
+      .partition { case (_, t) => !t.isInfinity }
+    Summary(timed, failed.map(_._1))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.ensureCheckpointDir(spark)
-    GraftSession.applyRuntimeTuning(spark)
-    graft.plans.TopKPushdown.install(spark)
+    val spark = GraftSession.harness()
     // Warm the session (executor threads, codegen compiler, parquet
     // footer caches) so the first measured query isn't startup noise.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -58,11 +56,7 @@ object Bench {
     // sweep can't race into the next timed region. No
     // positive-interference risk: each run rebuilds its DataFrames, so
     // old blocks were never reusable.
-    // Round-18 (verdict #8): a throwing query used to be timed at its
-    // time-to-throw (~0 s) and masqueraded as a speedup — now a failed
-    // pass reads +Inf, the min-of-2 keeps any SUCCESSFUL pass's time,
-    // and a key that failed BOTH passes lands in the JSON as the -1
-    // sentinel and is excluded from the total.
+    // A failed pass reads +Inf (see combinePasses).
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
@@ -75,19 +69,18 @@ object Bench {
       if (ok) t else Double.PositiveInfinity
     }
     val pass1 = selected.map { case (name, fn) => name -> once(fn) }
-    val results = selected.map { case (name, fn) =>
-      name -> combinePasses(pass1(name), once(fn))
-    }
+    val summary = combinePasses(selected.toSeq.map { case (name, fn) =>
+      (name, pass1(name), once(fn))
+    })
     // 3-decimal seconds keep the one-line JSON short enough that a
     // tail-capturing driver doesn't truncate the leading queries (the
     // round-2 report lost ~25 entries to full-precision doubles).
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + f(v) }
+    val qs = summary.timed.map { case (k, v) => s"\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
-    // -1 failure sentinels are excluded from the total so a breakage
-    // can't read as a speedup (verdict #8).
-    val total = totalOf(results.values)
-    val json = s"""{"metric":"total","value":${f(total)},"unit":"sec","runs_per_query":2,"agg":"min","queries":$qs,"sf":"$sfDir"}"""
+    val failed = summary.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = summary.total
+    val json = s"""{"metric":"total","value":${f(total)},"unit":"sec","runs_per_query":2,"agg":"min","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
     // Belt and braces: the same JSON goes to a TRACKED file (BENCH_FULL
     // .json — not gitignored), so the complete per-query map survives as
     // a committed artifact every round even though the driver's bounded
@@ -108,21 +101,6 @@ object Bench {
       true
     }
     println(json)
-    // Round-18 (verdict #7): the complete per-query map ALSO goes to
-    // stdout in short CHUNKED lines (~40 entries each) so a bounded
-    // stdout tail reconstructs as many per-query numbers as its budget
-    // allows even when the one-line map above is truncated —
-    // belt-and-braces next to the tracked BENCH_FULL.json. Distinct
-    // metric name keeps line-by-line JSON consumers from
-    // double-counting; the total_tail line stays LAST and unchanged.
-    val chunkSize = 40
-    val entries = results.toSeq
-    val nChunks = (entries.size + chunkSize - 1) / chunkSize
-    entries.grouped(chunkSize).zipWithIndex.foreach { case (chunk, i) =>
-      val cqs = chunk.map { case (k, v) => s"\"" + k + "\":" + f(v) }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"chunk","idx":$i,"of":$nChunks,"queries":$cqs}""")
-    }
     // The driver captures a bounded TAIL of stdout and the long per-query
     // line has been truncated past parsing three rounds running — a short
     // line printed LAST always survives the capture. Distinct metric name

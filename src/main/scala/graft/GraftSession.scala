@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level plumbing shared by the harness entry points (Verify,
-  * Bench) and available to library users.
+/** Session-level plumbing shared by the harness mains (Bench, Verify,
+  * PlanDumpF, KeyCheck, ScaleStress) and the test suite, and available
+  * to library users.
   *
   * `ensureCheckpointDir` makes iterative operators' RELIABLE-checkpoint
   * branch actually run: ConnectedComponents (dedup_cluster_canon) cuts
@@ -14,6 +15,26 @@ import org.apache.spark.sql.SparkSession
   * directory, removed at JVM exit.
   */
 object GraftSession {
+
+  /** The one session builder of the harness mains and the tests, so the
+    * oracle pass checks the plans the bench times: `local[cores]` (the
+    * mains' default: `SPARK_GRAFT_CPUS`, else 4), one shuffle partition
+    * per core, UTC, no UI, WARN logging, a checkpoint dir and the top-k
+    * pushdown rule. Reuses a live session (as `getOrCreate` does), so two
+    * calls install the rule once. */
+  def harness(
+      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    ensureCheckpointDir(spark)
+    graft.plans.TopKPushdown.install(spark)
+    spark
+  }
 
   private val cleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -37,53 +58,9 @@ object GraftSession {
       }
     }
 
-  /** Scale-adaptive shuffle sizing for the harness sessions (round-18,
-    * guide §2.2 "fewer, larger reduce partitions" / round-17 verdict
-    * "kill the anti-scaling"). The full bench ran FASTER on 8 cores
-    * than 32 because every shuffle at fixture scale fans into
-    * `spark.sql.shuffle.partitions` = cores tiny partitions and the
-    * per-task scheduling overhead dominates; AQE's coalescing left
-    * them alone because `parallelismFirst` (default true) refuses to
-    * coalesce below the session's default parallelism. Sizing
-    * reducers BY BYTES instead is the scale-correct behavior — at
-    * fixture scale a kB shuffle collapses to one task, at 100 TB the
-    * same rule yields thousands of advisory-sized reducers — so the
-    * conf, not a tuned constant, carries the scale adaptivity.
-    *
-    * `canChangeCachedPlanOutputPartitioning` lets the same rule reach
-    * the persisted loop-invariant edge caches of the iterative graph
-    * family (their one-time `repartition(key)` otherwise pins
-    * cores-many near-empty partitions that every superstep join must
-    * match). None of these change any query's rows — partitioning
-    * only.
-    *
-    * Advisory size is env-parameterized (SPARK_GRAFT_ADVISORY_MB).
-    * The local default is 8 MB, measured (round-18 sweep: 64 MB
-    * serialized the compute-heavy small-byte reducers of the
-    * closeness-family BFS — graph_closeness 5.9 → 9.6 s — while 8 MB
-    * kept kB-scale superstep shuffles at one task AND left MB-scale
-    * aggregation reducers parallel). Coalescing only MERGES partitions
-    * below the advisory — it never splits — so a small advisory is the
-    * CONSERVATIVE setting at production scale: reducers already above
-    * 8 MB are untouched, and cluster deployments whose shuffles are
-    * network-bound raise the env toward the guide's 100 MB-1 GB band. */
-  def applyRuntimeTuning(spark: SparkSession): Unit = {
-    // SPARK_GRAFT_COALESCE=bytes flips AQE to pure byte-sized reducers
-    // (parallelismFirst=false); unset/off keeps Spark's default
-    // parallelism-first behavior. Env-gated so the two policies A/B
-    // under the unchanged harness.
-    if (sys.env.get("SPARK_GRAFT_COALESCE").contains("bytes")) {
-      val advisoryMb = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "8")
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${advisoryMb}m")
-    }
-  }
-
   /** Drop cached relations and any leftover persisted RDDs — the ONE
-    * copy of the per-query block hygiene both harness drivers (Bench,
-    * Verify) run between queries. Several operators pin blocks whose
+    * copy of the per-query block hygiene the harness mains run between
+    * queries. Several operators pin blocks whose
     * lifetime Spark's ContextCleaner only reclaims on GC
     * (GlobalRank's two-pass partitioning pin, iterative superstep
     * checkpoints, pivot samples); across a 170+-query run those dead

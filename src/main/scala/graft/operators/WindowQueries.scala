@@ -273,10 +273,11 @@ object WindowQueries {
     // rule (plans/TopKPushdown.scala) rewrites the Filter(rn <= 2) over
     // the Window into TopKPerGroupNode, so the plan is the bounded-heap
     // two-phase operator + a re-window over ≤ 2 rows per group (no extra
-    // exchange or sort — the operator passes both through). Plan pinned
-    // in PlanAuditSpec; rule unit-tested in TopKPushdownSpec.
+    // exchange or sort — the operator passes both through). The rule is
+    // installed by GraftSession.harness (or GraftExtensions), never by
+    // the query. Plan pinned in PlanAuditSpec; rule unit-tested in
+    // TopKPushdownSpec.
     "topk_pushdown_rank" -> ((s, dir) => {
-      graft.plans.TopKPushdown.install(s)
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("value").desc, col("event_id"))
       events(s, dir)

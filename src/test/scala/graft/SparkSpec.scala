@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM under Test/fork). Mirrors the
-  * harness entry points (Verify/Bench) incl. the checkpoint dir, so the
-  * reliable-checkpoint branch of iterative operators is what tests
-  * exercise. */
+/** Shared session for all suites (one JVM under Test/fork): the harness
+  * session Verify and Bench run on, so tests plan queries as they do.
+  * Four cores, not `SPARK_GRAFT_CPUS`, so test plans do not depend on
+  * the machine's core count. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.ensureCheckpointDir(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.harness(cores = 4)
 
   val sf = "/root/testdata/sf0.001"
 }

@@ -7,10 +7,9 @@ import org.apache.spark.sql.graftshim
 import graft.plans.{TopKPerGroupNode, TopKPushdownRule, TopKStrategy}
 
 /** Unit tests for the top-k pushdown optimizer rule. Baselines are
-  * captured with the kill switch OFF, because another suite (e.g.
-  * PlanAuditSpec via the declared `topk_pushdown_rank` key) may have
-  * installed the rule session-wide — without the guard these tests would
-  * compare the operator against itself. The rule is then applied
+  * captured with the kill switch OFF, because the harness session has
+  * the rule installed — without the guard these tests would compare the
+  * operator against itself. The rule is then applied
   * MANUALLY to the frozen window-form plan. End-to-end installed
   * behavior is covered by the declared key (oracle gate + PlanAuditSpec
   * pin).
