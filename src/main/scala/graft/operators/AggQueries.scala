@@ -1473,10 +1473,10 @@ object AggQueries {
         .groupBy(col("l_partkey"))
         .agg(sum(round(col("l_extendedprice") * 100).cast("long"))
           .as("cents"))
-        .select(col("l_partkey"), col("cents"),
-          (lit(Long.MaxValue) - col("cents")).as("inv"))
-      val ranked = graft.plans.GlobalRank.runningSum(
-        rev, Seq("inv", "l_partkey"), "cents", "cum")
+        .select(col("l_partkey"), col("cents"))
+      val ranked = graft.plans.GlobalRank.runningSum(rev,
+        Seq(col("cents").desc_nulls_first, col("l_partkey")), Seq("cents"),
+        Seq("cum"))
       val tot = rev.agg(sum(col("cents").cast(D0)).as("total"))
       ranked.crossJoin(broadcast(tot))
         .select(col("cents"),

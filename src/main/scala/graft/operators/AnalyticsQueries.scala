@@ -249,7 +249,7 @@ object AnalyticsQueries {
     // declared agg_approx_quantile key demonstrates that sketch.
     "hist_equidepth" -> ((s, dir) => {
       val e = events(s, dir).select(col("value"))
-      graft.plans.GlobalRank.percentCume(e, "value")
+      graft.plans.GlobalRank.percentCume(e, Seq(col("value")))
         .select(least(floor(col("cd") * 4), lit(3L)).cast("int").as("bucket"),
           col("value"))
         .groupBy("bucket")
@@ -613,8 +613,8 @@ object AnalyticsQueries {
             col("event_id")))).as("e"))
         .select(col("e.t").as("t"), col("e.d").as("d"),
           col("e.event_id").as("event_id"))
-      graft.plans.GlobalRank.runningSum(ends, Seq("t", "d", "event_id"),
-          "d", "cum")
+      graft.plans.GlobalRank.runningSum(ends,
+          Seq(col("t"), col("d"), col("event_id")), Seq("d"), Seq("cum"))
         .agg(max(struct(col("cum"), (-col("t")).as("negt"))).as("m"))
         .select(col("m.cum").as("max_concurrent"),
           (-col("m.negt")).as("at_ms"))
@@ -731,8 +731,8 @@ object AnalyticsQueries {
         .select(explode(sequence(col("lo"), col("hi"))).as("day"))
       val joined = spine.join(dayNew, Seq("day"), "left")
         .select(col("day"), coalesce(col("n_new"), lit(0L)).as("n_new"))
-      graft.plans.GlobalRank.runningSum(joined, Seq("day"), "n_new",
-          "cum_users")
+      graft.plans.GlobalRank.runningSum(joined, Seq(col("day")),
+          Seq("n_new"), Seq("cum_users"))
         .orderBy("day")
     }),
 

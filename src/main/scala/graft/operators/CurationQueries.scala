@@ -335,7 +335,7 @@ object CurationQueries {
           md5(col("doc_id").cast("string").cast("binary")).as("skey"),
           lit(1L).as("one"))
       val ranked = graft.plans.GlobalRank.runningSum(
-        d, Seq("skey", "doc_id"), "one", "rk")
+        d, Seq(col("skey"), col("doc_id")), Seq("one"), Seq("rk"))
       val tagged = ranked
         .withColumn("picked", pmod(col("rk"), lit(20L)) === 7)
       tagged.groupBy("source")

@@ -489,7 +489,8 @@ object EtlQueries {
         .agg(count(lit(1)).as("n_facts"))
         .withColumn("one", lit(1L))
       graft.plans.GlobalRank
-        .runningSum(pairs, Seq("l_partkey", "l_suppkey"), "one", "sk")
+        .runningSum(pairs, Seq(col("l_partkey"), col("l_suppkey")),
+          Seq("one"), Seq("sk"))
         .select(col("sk"), col("l_partkey"), col("l_suppkey"),
           col("n_facts"))
         .orderBy("sk")

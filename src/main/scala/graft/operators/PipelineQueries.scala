@@ -1555,7 +1555,7 @@ object PipelineQueries {
             .cast("binary")).as("h"),
           lit(1L).as("one"))
       graft.plans.GlobalRank.runningSum(staged,
-          Seq("stage", "h", "doc_id"), "one", "pos")
+          Seq(col("stage"), col("h"), col("doc_id")), Seq("one"), Seq("pos"))
         .select(col("pos"), col("doc_id"), col("n_tokens"), col("stage"))
         .orderBy("pos")
     }),
@@ -2005,8 +2005,8 @@ object PipelineQueries {
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"),
           md5(col("doc_id").cast("string").cast("binary")).as("skey"))
-      graft.plans.GlobalRank.runningSum(
-          docs, Seq("skey", "doc_id"), "n_tokens", "cum")
+      graft.plans.GlobalRank.runningSum(docs,
+          Seq(col("skey"), col("doc_id")), Seq("n_tokens"), Seq("cum"))
         .select(col("doc_id"), col("n_tokens"),
           (col("cum") - col("n_tokens")).as("start_off"),
           expr(s"(cum - n_tokens) div ${budget}L").as("bin"))
@@ -2027,8 +2027,8 @@ object PipelineQueries {
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"),
           md5(col("doc_id").cast("string").cast("binary")).as("skey"))
-      val packed = graft.plans.GlobalRank.runningSum(
-          docs, Seq("skey", "doc_id"), "n_tokens", "cum")
+      val packed = graft.plans.GlobalRank.runningSum(docs,
+          Seq(col("skey"), col("doc_id")), Seq("n_tokens"), Seq("cum"))
         .select(col("n_tokens"),
           expr(s"(cum - n_tokens) div ${budget}L").as("bin"))
       val fills = packed.groupBy("bin")
@@ -2291,9 +2291,10 @@ object PipelineQueries {
         .select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
       val counts = toks.groupBy("word").agg(count(lit(1)).as("n"))
-        .select(col("word"), (-col("n")).as("negn"), lit(1L).as("one"))
+        .select(col("word"), col("n"), lit(1L).as("one"))
       val vocab = graft.plans.GlobalRank
-        .runningSum(counts, Seq("negn", "word"), "one", "id")
+        .runningSum(counts, Seq(col("n").desc_nulls_first, col("word")),
+          Seq("one"), Seq("id"))
         .select(col("word"), col("id"))
       toks.join(vocab, Seq("word"))
         .groupBy("doc_id")
@@ -2514,10 +2515,9 @@ object PipelineQueries {
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"),
           qualityExpr(col("text")).as("q"))
-      val ranked = graft.plans.GlobalRank.runningSum(
-        d.select(col("doc_id"), col("n_tokens"), col("q"),
-          (-col("q")).as("negq")),
-        Seq("negq", "doc_id"), "n_tokens", "cum_tokens")
+      val ranked = graft.plans.GlobalRank.runningSum(d,
+        Seq(col("q").desc_nulls_first, col("doc_id")), Seq("n_tokens"),
+        Seq("cum_tokens"))
       val budget = d.agg((sum(col("n_tokens")) / 4).cast("long")
         .as("budget"))
       ranked.crossJoin(broadcast(budget))
@@ -2547,7 +2547,7 @@ object PipelineQueries {
             col("doc_id").cast("string")).cast("binary")).as("k"),
           lit(1L).as("one"))
       val ranked = graft.plans.GlobalRank.runningSum(keyed,
-        Seq("epoch", "k", "doc_id"), "one", "cum")
+        Seq(col("epoch"), col("k"), col("doc_id")), Seq("one"), Seq("cum"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
       ranked.crossJoin(broadcast(n))
         .select(col("epoch"),
@@ -2570,7 +2570,7 @@ object PipelineQueries {
           lit(1L).as("one"))
       def ranks(par: Int) = graft.plans.GlobalRank.runningSum(
         d.filter(col("par") === par).select(col("doc_id"), col("one")),
-        Seq("doc_id"), "one", "cum")
+        Seq(col("doc_id")), Seq("one"), Seq("cum"))
       val a = ranks(0).select(
         (col("cum") - 1 + expr("(cum - 1) div 3")).as("pos"),
         lit("A").as("grp"), col("doc_id"))

@@ -46,10 +46,9 @@ object SortSetQueries {
             * (lit(100L) - round(col("l_discount") * 100).cast("long")))
             .cast("long").as("rev"),
           sum(col("l_quantity")).cast("long").as("qty"))
-        .select(col("pk"), col("rev"), col("qty"),
-          (-col("rev")).as("negrev"), (-col("qty")).as("negqty"))
-      val ranked = graft.plans.GlobalRank.runningMaxExclusive(
-        pq, Seq("negrev", "negqty", "pk"), "qty", "prevmax")
+      val ranked = graft.plans.GlobalRank.runningMaxExclusive(pq,
+        Seq(col("rev").desc_nulls_first, col("qty").desc_nulls_first,
+          col("pk")), "qty", "prevmax")
       ranked
         .withColumn("maxrev_q",
           max(col("rev")).over(Window.partitionBy(col("qty"))))

@@ -273,7 +273,8 @@ object TextQueries {
         .select(col("doc_id"), col("n_tokens"),
           md5(col("doc_id").cast("string").cast("binary")).as("skey"))
       graft.plans.GlobalRank.runningSum(
-          survivors, Seq("skey", "doc_id"), "n_tokens", "cum")
+          survivors, Seq(col("skey"), col("doc_id")), Seq("n_tokens"),
+          Seq("cum"))
         .select(col("doc_id"), col("n_tokens"),
           (col("cum") - col("n_tokens")).as("start_off"),
           expr(s"(cum - n_tokens) div ${budget}L").as("bin"))
@@ -349,7 +350,7 @@ object TextQueries {
           substring(concat_ws(" ", col("toks")), 1, 32))
         .withColumn("one", lit(1L))
       val ranked = graft.plans.GlobalRank.runningSum(
-        d, Seq("skey", "doc_id"), "one", "rn")
+        d, Seq(col("skey"), col("doc_id")), Seq("one"), Seq("rn"))
       val probes = ranked.select(col("rn"), col("doc_id"),
           col("toks"))
         .withColumn("prn", explode(expr("sequence(rn + 1, rn + 4)")))

@@ -184,7 +184,7 @@ object WindowQueries {
     "win_percent_cume" -> ((s, dir) => {
       graft.plans.GlobalRank.percentCume(
           t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
-          "o_totalprice")
+          Seq(col("o_totalprice")))
         .select(col("o_orderkey"), col("o_totalprice"),
           r4d(col("pr")).as("pr"), r4d(col("cd")).as("cd"))
         .orderBy(col("o_orderkey"))
